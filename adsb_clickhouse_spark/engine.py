@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import SOURCES
-from .operators.latest import latest_view, stride_sample
+from .operators.latest import stride_sample
 from .plans import tables
 from .plans.storeio import storeio_for
 from .streaming.pipeline import IngestPipeline
@@ -70,9 +70,7 @@ class AdsbEngine:
     def register_views(self) -> list[str]:
         """Register every reference table/view name that has data on disk."""
         registered = []
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
         for name, pipe in self.pipelines.items():
-            cfg = SOURCES[name]
             if storeio_for(pipe.history_path).isdir(pipe.history_path):
                 hist = tables.read_history(self.spark, pipe.history_path)
                 hist.createOrReplaceTempView(f"positions_{name}")
@@ -81,16 +79,13 @@ class AdsbEngine:
             if storeio_for(pipe.state_path).isdir(pipe.state_path):
                 state = tables.read_state(self.spark, pipe.state_path)
                 state.createOrReplaceTempView(f"positions_{name}_replacing")
-                lv = latest_view(state, freshness=cfg.freshness, now=now_col)
-                lv.createOrReplaceTempView(f"positions_{name}_latest")
+                pipe.latest(self.spark).createOrReplaceTempView(f"positions_{name}_latest")
                 registered += [f"positions_{name}_replacing", f"positions_{name}_latest"]
-        combined_path = os.path.join(self.base_dir, "combined", "state")
-        if storeio_for(combined_path).isdir(combined_path):
-            comb = tables.read_state(self.spark, combined_path)
+        pipe = next(iter(self.pipelines.values()))
+        if storeio_for(pipe.combined_path).isdir(pipe.combined_path):
+            comb = tables.read_state(self.spark, pipe.combined_path)
             comb.createOrReplaceTempView("positions_global_combined_test")
-            latest_view(comb, freshness="5 minutes", now=now_col).createOrReplaceTempView(
-                "positions_global_combined_latest"
-            )
+            pipe.combined_latest(self.spark).createOrReplaceTempView("positions_global_combined_latest")
             registered += ["positions_global_combined_test", "positions_global_combined_latest"]
         return registered
 
@@ -102,25 +97,17 @@ class AdsbEngine:
     def current_positions(self, source: str = "global_stream", *, moving_only: bool = True) -> DataFrame:
         """Geomap panel query (Current_Positions_Global_Stream.json rawSql):
         latest per aircraft, optionally moving only, z-ordered by altitude."""
-        cfg = SOURCES[source]
-        pipe = self.pipelines[source]
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(self.spark, pipe.state_path)
-        lv = latest_view(state, freshness=cfg.freshness, now=now_col)
+        lv = self.pipelines[source].latest(self.spark)
         if moving_only:
             lv = lv.filter(F.col("ground_speed") > 0)
         return lv.orderBy("alt_baro")
 
-
     def nearest_aircraft(self, *, source: str = "local") -> DataFrame:
         """Nearest-aircraft table (Current_Positions_Local.json:526):
         ORDER BY distance ASC over the latest view."""
-        cfg = SOURCES[source]
-        pipe = self.pipelines[source]
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(self.spark, pipe.state_path)
         return (
-            latest_view(state, freshness=cfg.freshness, now=now_col)
+            self.pipelines[source]
+            .latest(self.spark)
             .select(
                 F.col("distance").alias("Distance"),
                 F.col("direction").alias("Direction"),

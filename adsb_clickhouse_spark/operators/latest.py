@@ -3,13 +3,16 @@
 ``latest_per_key`` is the single Spark operator that subsumes the
 reference's three-layer construct: ReplacingMergeTree merge-time argmax
 (schema/schema-local.sql:370-372) + read-time ``FINAL`` + ``LIMIT 1 BY``
-(schema/schema-local.sql:455-460). SURVEY.md §2.5 W1 / §2.4 A1.
+(schema/schema-local.sql:455-460). SURVEY.md §2.5 W1 / §2.4 A1. It runs
+at write time (``plans.tables.upsert_state``), so a committed state
+snapshot is fully merged and the ``positions_*_latest`` views apply only
+``recency_filter`` — ``FINAL`` / ``LIMIT 1 BY`` is a no-op on it.
 
 Scale notes:
 - the window/max_by shuffles once on the key; with ~12k live aircraft and
   AQE the shuffle is tiny. For 100 TB history scans, apply the freshness
   filter FIRST so partition pruning (scrape_date) cuts the scan before the
-  shuffle — `latest_view` does this.
+  shuffle.
 - `max_by(struct(*), version_col)` is a hash aggregate with map-side
   partial aggregation — strictly less shuffle traffic than the
   row_number window (which must shuffle every row). We use it by default
@@ -66,20 +69,6 @@ def recency_filter(df: DataFrame, window: str, *, now: Column | None = None, ts:
     tests (SURVEY.md §7.3 hard part (b))."""
     now_col = now if now is not None else F.current_timestamp()
     return df.filter(F.col(ts) > now_col - F.expr(f"INTERVAL {window}"))
-
-
-def latest_view(
-    history: DataFrame,
-    *,
-    freshness: str,
-    key: str = "icao24",
-    version: str = "scrape_time",
-    now: Column | None = None,
-) -> DataFrame:
-    """The ``positions_*_latest`` view (schema/schema-local.sql:455-460):
-    recency filter first (partition pruning at scale), then keyed argmax."""
-    fresh = recency_filter(history, freshness, now=now, ts=version)
-    return latest_per_key(fresh, key, version)
 
 
 def stride_sample(df: DataFrame, n: int, order_by: str | list[str]) -> DataFrame:

@@ -373,6 +373,17 @@ class LocalStoreIO(StoreIO):
         shutil.rmtree(path, ignore_errors=True)
 
     def rename(self, src: str, dst: str) -> None:
+        # os.rename silently replaces an EMPTY destination directory; the
+        # contract (and both fakes) refuse any existing dst for a
+        # directory. A racer creating an empty dst between this check and
+        # the rename can still be replaced; a non-empty one fails in
+        # os.rename itself (ENOTEMPTY).
+        if (
+            os.path.isdir(src)
+            and os.path.lexists(dst)
+            and os.path.normpath(src) != os.path.normpath(dst)
+        ):
+            raise FileExistsError(f"rename target exists: {dst}")
         os.rename(src, dst)
 
     def mtime(self, path: str) -> float:

@@ -35,6 +35,11 @@ shape as a Delta/Iceberg snapshot commit, minus the JVM txn log):
 - readers resolve the pointer and scan that snapshot — there is never a
   window where the state directory is absent, and a snapshot a
   registered temp view is still scanning survives until GC;
+- a committed snapshot is fully merged (one row per key: ``latest_per_key``
+  runs before the write), so readers apply only the recency filter — the
+  reference's read-time ``FINAL`` / ``LIMIT 1 BY`` is a no-op here;
+- snapshots are immutable, so ``read_state`` reuses one frame per state
+  path while the pointer names the same snapshot;
 - non-current snapshots are GC'd only after ``STATE_GC_GRACE_S``
   (readers re-registering views within the grace period never lose
   files);
@@ -395,12 +400,29 @@ def upsert_state(
         _gc_snapshots(path, keep=new_version, grace_s=gc_grace_s)
 
 
+# path -> (session, snapshot dir, frame); see read_state
+_state_frames: dict[str, tuple[SparkSession, str, DataFrame]] = {}
+
+
 def read_state(spark: SparkSession, path: str) -> DataFrame:
-    """Resolve the current snapshot pointer and scan it. Falls back to
-    reading `path` directly for pre-versioned layouts (and to surface the
-    standard missing-table error when nothing was ever committed)."""
+    """Resolve the current snapshot pointer and scan it. The snapshot is
+    fully merged (one row per key), so readers apply only the recency
+    filter: the reference's read-time ``FINAL`` / ``LIMIT 1 BY`` is a
+    no-op. The pointer is read on every call; while it names the same
+    snapshot in the same session, the frame from the earlier call is
+    reused — no file listing, no footer-inference job. Snapshots are
+    immutable and the current one is never GC'd; a moved pointer replaces
+    the entry, so a commit is visible on the next read (racing readers
+    may both miss, which costs a read, never a stale frame). Falls back
+    to reading `path` directly for pre-versioned layouts (and to surface
+    the standard missing-table error when nothing was ever committed)."""
     snap = _current_snapshot_dir(path)
-    return spark.read.parquet(snap if snap else path)
+    if snap is None:
+        return spark.read.parquet(path)
+    hit = _state_frames.get(path)
+    if hit is None or hit[0] is not spark or hit[1] != snap:
+        hit = _state_frames[path] = (spark, snap, spark.read.parquet(snap))
+    return hit[2]
 
 
 def expire_history(

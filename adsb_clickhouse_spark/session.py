@@ -17,6 +17,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory (``MemTotal``), capped at 16 GB: the driver
+    heap must fit the host with room for Python workers and the page cache
+    — a swapless box gets OOM-killed, not slowed, when it over-commits.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"  # no /proc (non-Linux): a conservative fixed heap
+    return f"{max(1024, min(16 * 1024, total_kb // 1024 // 2))}m"
+
+
 def get_spark(app_name: str = "adsb_clickhouse_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -51,7 +64,7 @@ def get_spark(app_name: str = "adsb_clickhouse_spark", *, shuffle_partitions: in
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

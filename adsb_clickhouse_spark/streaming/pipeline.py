@@ -45,6 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import SourceConfig
 from ..functions.cleanse import cleanse
 from ..operators.combined import to_combined
+from ..operators.latest import recency_filter
 from ..plans import tables
 
 
@@ -267,16 +268,15 @@ class IngestPipeline:
     # -- query surface --------------------------------------------------------
 
     def latest(self, spark) -> DataFrame:
-        """The positions_<source>_latest view (schema-local.sql:455-460)."""
-        from ..operators.latest import latest_view
-
-        now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(spark, self.state_path)
-        return latest_view(state, freshness=self.cfg.freshness, now=now_col)
+        """The positions_<source>_latest view (schema-local.sql:455-460):
+        the state snapshot is already one row per key, so only the
+        recency filter applies."""
+        return self._fresh(tables.read_state(spark, self.state_path), self.cfg.freshness)
 
     def combined_latest(self, spark) -> DataFrame:
-        from ..operators.latest import latest_view
+        """positions_global_combined_latest: same contract, 5-minute window."""
+        return self._fresh(tables.read_state(spark, self.combined_path), "5 minutes")
 
+    def _fresh(self, state: DataFrame, window: str) -> DataFrame:
         now_col = F.lit(self.now).cast("timestamp") if self.now else None
-        state = tables.read_state(spark, self.combined_path)
-        return latest_view(state, freshness="5 minutes", now=now_col)
+        return recency_filter(state, window, now=now_col)

@@ -1,4 +1,4 @@
-"""latest_per_key / latest_view semantics (SURVEY §2.4 A1, §2.5 W1;
+"""latest_per_key / recency_filter semantics (SURVEY §2.4 A1, §2.5 W1;
 FIXTURES.md §6 cases 7-9)."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from adsb_clickhouse_spark.operators.latest import (
     latest_per_key,
-    latest_view,
+    recency_filter,
     stride_sample,
 )
 
@@ -63,12 +63,12 @@ def test_agg_and_window_strategies_agree(spark):
     assert a == w
 
 
-def test_latest_view_freshness_window(spark):
+def test_recency_filter_freshness_window(spark):
     rows = [
         ("fresh", NOW - timedelta(seconds=10), NOW, 1),
         ("stale", NOW - timedelta(minutes=20), NOW, 2),
     ]
-    out = latest_view(_df(spark, rows), freshness="15 seconds", now=F.lit(NOW)).collect()
+    out = recency_filter(_df(spark, rows), "15 seconds", now=F.lit(NOW)).collect()
     assert [r["icao24"] for r in out] == ["fresh"]
 
 

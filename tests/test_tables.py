@@ -190,3 +190,58 @@ def test_compact_partition(spark, tmp_base):
         .count()
         == 3
     )
+
+
+def test_every_committed_state_snapshot_is_one_row_per_key(spark, tmp_base):
+    """Readers apply only the recency filter to a state snapshot (no
+    read-time argmax), which is sound only if EVERY committed snapshot is
+    already unique per key — also under concurrent upserts into one path
+    (the state and combined sinks run from IngestPipeline's pool) and a
+    replayed batch."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = os.path.join(tmp_base, "state")
+    batches = [
+        _df(
+            spark,
+            [
+                (f"k{(b * 3 + i) % 8}", NOW - timedelta(seconds=s), b * 100 + i * 10 + s)
+                for i in range(6)
+                for s in (0, 5, 9)
+            ],
+        )
+        for b in range(6)
+    ]
+    with ThreadPoolExecutor(max_workers=6) as pool:
+        futs = [pool.submit(tables.upsert_state, b, path, ttl="1 hour", now=NOW) for b in batches]
+        for f in futs:
+            f.result(timeout=300)
+    tables.upsert_state(batches[0], path, ttl="1 hour", now=NOW)  # replay
+    snaps = sorted(e for e in os.listdir(path) if e.startswith("v_"))
+    assert len(snaps) == len(batches) + 1  # all within the GC grace period
+    for snap in snaps:
+        df = spark.read.parquet(os.path.join(path, snap))
+        n, keys = df.agg(F.count("*"), F.countDistinct("icao24")).first()
+        assert n == keys > 0, snap
+    assert {r["icao24"] for r in tables.read_state(spark, path).collect()} == {f"k{i}" for i in range(8)}
+
+
+def test_read_state_reuses_frame_until_pointer_moves(spark, tmp_base):
+    """An unchanged pointer costs no Spark job (no listing, no footer
+    inference); a commit in between is visible on the next read."""
+    import uuid
+
+    sc = spark.sparkContext
+    path = os.path.join(tmp_base, "state")
+    tables.upsert_state(_df(spark, [("a", NOW, 1)]), path, ttl=None, now=NOW)
+    first = tables.read_state(spark, path)
+    group = f"read-state-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "repeated read_state")
+    try:
+        again = tables.read_state(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert again is first
+    tables.upsert_state(_df(spark, [("a", NOW + timedelta(seconds=1), 2)]), path, ttl=None, now=NOW)
+    assert [r["v"] for r in tables.read_state(spark, path).collect()] == [2]
