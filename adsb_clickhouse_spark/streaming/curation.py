@@ -164,15 +164,17 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import time
 import uuid
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.curation import quality_signals
 from ..plans.storeio import storeio_for
-from .pipeline import _checkpoint_run_id
+from .pipeline import _checkpoint_run_id, _run_concurrently
 
 _STORE_POINTER = "_STORE"
 _COMMITS_DIR = "_commits"
@@ -301,6 +303,73 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def _append_segment(df: DataFrame, path: str, seg: str) -> None:
+    """Append ``df`` as the ``batch_id=<seg>`` segment of ``path`` — the
+    one write shape every batch-keyed store shares (a replay clears the
+    segment first, see process_batch)."""
+    (
+        df.withColumn("batch_id", F.lit(seg))
+        .write.mode("append")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+class _BatchRun:
+    """The bookkeeping of one ``CurationIngest.process_batch`` call.
+
+    - ``taps``: named row-count Observations in funnel order. They
+      piggyback the curated write's own job via CollectMetrics — ZERO
+      extra passes, and a tap re-referenced by a downstream self-join
+      still fires exactly once per query; the stats row folds them.
+    - ``ckpts``: every eager localCheckpoint the batch took, freed by
+      ``free`` at batch end (see _free_local_checkpoint).
+    - ``walls``: per-stage wall clock — every Spark action in the batch
+      gets a named bucket (two clock reads per stage, no Spark cost),
+      published as ``CurationIngest.last_stage_wall``.
+    - ``base``: the valve checkpoint the near-dedup drop-sets derive
+      from, and ``text_drops``: the text stage's drop-sets, which the
+      media stage's pair restriction reads.
+    """
+
+    def __init__(self, ingest: CurationIngest, docs: DataFrame, seg: str):
+        self.docs = docs
+        self.spark = docs.sparkSession
+        self.seg = seg
+        self.plan_probe = ingest.plan_probe
+        self.host_on = ingest.host_col is not None and ingest.host_col in docs.columns
+        self.media_on = ingest.media_dedup and ingest.media_col in docs.columns
+        self.media_bands_on = self.media_on and ingest.media_near_dedup
+        self.base: DataFrame | None = None
+        self.text_drops: list[DataFrame] = []
+        self.taps: list[tuple[str, Observation]] = []
+        self.ckpts: list[DataFrame] = []
+        self.walls: dict[str, float] = {}
+        self._t_last = time.perf_counter()
+
+    def tap(self, df: DataFrame, stage: str) -> DataFrame:
+        if self.plan_probe is not None:
+            self.plan_probe(stage, df)
+        ob = Observation()
+        self.taps.append((stage, ob))
+        return df.observe(ob, F.count(F.lit(1)).alias("n"))
+
+    def mark(self, stage: str) -> None:
+        now = time.perf_counter()
+        self.walls[stage] = round(self.walls.get(stage, 0.0) + now - self._t_last, 3)
+        self._t_last = now
+
+    def checkpoint(self, df: DataFrame, stage: str) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        self.ckpts.append(df)
+        self.mark(stage)
+        return df
+
+    def free(self) -> None:
+        for df in self.ckpts:
+            _free_local_checkpoint(df)
+
+
 class MaintenanceLease:
     """The token ``CurationIngest.maintenance_lease()`` yields: a
     context manager over the store's ``.maintain_lock`` writer lock
@@ -365,14 +434,6 @@ class CurationIngest:
         host_trust_seeds: list | None = None,
         host_rank_iterations: int = 5,
         host_min_rank_pct: float | None = None,
-        ingest_stats: bool = True,
-        parallel_appends: bool = True,
-        # derive ALL near-dedup drop-sets from the single
-        # valve_ckpt_funnel checkpoint instead of taking a second
-        # full-frame checkpoint between the text and media stages (r16
-        # floor cut — see the fused-valve note in process_batch); False
-        # keeps the legacy two-checkpoint form for A/B and debugging
-        fused_valves: bool = True,
         # lease discipline for the maintenance jobs: False warns on a
         # lease-less maintain against a leased store (ad-hoc /
         # notebook-friendly); True raises. The curate-maintain CLI runs
@@ -436,15 +497,9 @@ class CurationIngest:
         self.host_min_rank_pct = host_min_rank_pct
         self.host_edges_path = os.path.join(base_dir, "host_edges")
         self.host_ranks_path = os.path.join(base_dir, "host_ranks")
-        self.ingest_stats = ingest_stats
-        # run the independent per-batch store appends from concurrent
-        # driver threads (r12 floor cut — see process_batch); False
-        # keeps the sequential form for A/B and debugging
-        self.parallel_appends = parallel_appends
-        self.fused_valves = fused_valves
         self.ingest_log_path = os.path.join(base_dir, "ingest_log")
         # per-stage wall clock of the LAST process_batch call, stage
-        # name -> seconds (see _mark in process_batch); the floor
+        # name -> seconds (see _BatchRun.mark); the floor
         # benchmark and ops dashboards read this
         self.last_stage_wall: dict[str, float] = {}
         # (n_buckets, positional) of the text index, read once per
@@ -556,7 +611,14 @@ class CurationIngest:
     # -- the funnel body (used by both batch and streaming) ---------------
 
     def process_batch(self, docs: DataFrame, batch_id: int | None = None) -> None:
-        spark = docs.sparkSession
+        """One micro-batch through the funnel. Every gate has one shape —
+        frame in, survivors out, its Observation tap taken:
+
+            scrub + policy → host gate → exact text/media/store →
+            [valve checkpoint] → text near → media near → splits →
+            materialize → curated write + store appends → stats row →
+            commit marker
+        """
         seg = self._seg(batch_id)
         if batch_id is not None and self._is_committed(seg):
             # the previous attempt finished BOTH appends; redelivery
@@ -567,61 +629,57 @@ class CurationIngest:
             self.last_stage_wall = {}  # no stale attribution from the
             return  # previous batch on a no-op redelivery
         # replay safety FIRST: a crashed attempt's fingerprints must not
-        # suppress this replay's own rows at the anti-join below
-        _clear_segment(self.curated_path, seg)
-        _clear_segment(self.fps_path, seg)
-        _clear_segment(self.host_edges_path, seg)
-        _clear_segment(self.phash_bands_path, seg)
-        _clear_segment(self.text_bands_path, seg)
-        _clear_segment(self.ingest_log_path, seg)
+        # suppress this replay's own rows at the store anti-join
+        for path in (
+            self.curated_path,
+            self.fps_path,
+            self.host_edges_path,
+            self.phash_bands_path,
+            self.text_bands_path,
+            self.ingest_log_path,
+        ):
+            _clear_segment(path, seg)
+        run = _BatchRun(self, docs, seg)
+        self.last_stage_wall = run.walls
+        try:
+            fresh = self._scrub_and_policy(run, docs)
+            fresh = self._host_gate(run, fresh)
+            fresh = self._exact_dedup(run, fresh)
+            if self.text_near_dedup or run.media_bands_on:
+                # PLAN-SIZE VALVE: each near-dedup stage builds drop-sets
+                # FROM the frame and anti-joins them back INTO it — a
+                # self-referencing join that doubles the logical plan
+                # tree every time. With both text and media stages on,
+                # Catalyst ANALYSIS time (driver-side, not execution)
+                # grew exponentially: 146 s for a 20-doc batch, measured.
+                # An eager localCheckpoint of the batch-sized frame
+                # truncates the lineage so every stage references a flat
+                # scan; the work up to here runs exactly once. Block loss
+                # on a real cluster kills the batch job, which the
+                # commit-marker replay already converges — never wrong
+                # results. Every near-dedup drop-set derives from this
+                # one frame (``run.base``; see _media_near for the one
+                # config that takes a second checkpoint).
+                fresh = run.base = run.checkpoint(fresh, "valve_ckpt_funnel")
+            fresh = self._text_near(run, fresh)
+            fresh = self._media_near(run, fresh)
+            fresh = self._assign_split(run, fresh)
+            fresh = self._materialize(run, fresh)
+            self._commit(run, fresh, batch_id)
+        finally:
+            run.free()
 
-        # per-gate observability (r11): named row-count taps piggyback
-        # the curated write's own job via CollectMetrics — ZERO extra
-        # passes, no extra actions, and (verified) a tap re-referenced
-        # by a downstream self-join still fires exactly once per query.
-        # The stats row is written under the same batch_id segment +
-        # commit marker as the data, so replay can't double-count.
-        from pyspark.sql import Observation
-
-        taps: list[tuple[str, Observation]] = []
-        # every eager localCheckpoint this batch takes, freed in the
-        # finally below (see _free_local_checkpoint)
-        ckpts: list[DataFrame] = []
-        # per-stage wall attribution (r11 verdict item 2): every Spark
-        # action in the batch gets a named wall-clock bucket, published
-        # as self.last_stage_wall — two clock reads per stage, no Spark
-        # cost. The all-stores floor benchmark reads this to attribute
-        # the per-batch fixed cost job by job.
-        import time as _time
-
-        walls: dict[str, float] = {}
-        _t_last = [_time.perf_counter()]
-
-        def _mark(stage: str) -> None:
-            now = _time.perf_counter()
-            walls[stage] = round(walls.get(stage, 0.0) + now - _t_last[0], 3)
-            _t_last[0] = now
-
-        self.last_stage_wall = walls
-
-        def _tap(df: DataFrame, stage: str) -> DataFrame:
-            if self.plan_probe is not None:
-                self.plan_probe(stage, df)
-            if not self.ingest_stats:
-                return df
-            ob = Observation()
-            taps.append((stage, ob))
-            return df.observe(ob, F.count(F.lit(1)).alias("n"))
-
-        # FUSED projective stages (r11, mirrors the batch funnel's
-        # fuse_projective path): scrub + langid + host attach compose
-        # column-wise on ONE batch scan — only the aggregate-bearing
-        # quality signals keep the doc_id join (their Gopher bigram
-        # groupBy forces that exchange anyway)
+    def _scrub_and_policy(self, run: _BatchRun, docs: DataFrame) -> DataFrame:
+        """Gate 1: scrub, language id and the policy filter (quality /
+        language / PII), adding the exact-text ``fingerprint``. The
+        projective stages (scrub + langid + the host column the host gate
+        reads) compose column-wise on ONE batch scan, mirroring the batch
+        funnel's fuse_projective path; only the aggregate-bearing quality
+        signals keep the doc_id join (their Gopher bigram groupBy forces
+        that exchange anyway)."""
         from ..operators.curation import _langid_enrich
         from ..operators.scrub import pii_counts, pii_redact
 
-        host_on = self.host_col is not None and self.host_col in docs.columns
         counts = pii_counts(F.col("text"))
         flag = None
         for c in counts:
@@ -630,79 +688,85 @@ class CurationIngest:
         base = docs.select(
             F.col("doc_id"),
             F.col("text").alias("__text"),
-            *([F.col(self.host_col).alias("__host")] if host_on else []),
+            *([F.col(self.host_col).alias("__host")] if run.host_on else []),
             *counts,
             flag.alias("has_pii"),
             pii_redact(F.col("text")).alias("clean_text"),
         )
-        scrubbed = _tap(_langid_enrich(base, "__text").drop("__text"), "in")
+        scrubbed = run.tap(_langid_enrich(base, "__text").drop("__text"), "in")
         # LEFT join so a doc that produces no quality row (e.g. token-less
         # text) reaches the policy filter with a NULL quality_score and
         # fails the >= gate THERE — the 'policy' tap's drop count is then
-        # exact instead of silently absorbing inner-join losses (r11
-        # advice). Catalyst's EliminateOuterJoin rewrites this back to an
-        # inner join under the null-rejecting predicate, so the physical
-        # plan is unchanged; only the attribution semantics are.
+        # exact instead of silently absorbing inner-join losses.
+        # Catalyst's EliminateOuterJoin rewrites this back to an inner
+        # join under the null-rejecting predicate, so the physical plan
+        # is unchanged; only the attribution semantics are.
         scored = scrubbed.join(quality_signals(docs), "doc_id", "left")
         cond = F.col("quality_score") >= self.min_quality
         if self.keep_langs is not None:
             cond = cond & F.col("predicted_lang").isin(list(self.keep_langs))
         if self.drop_pii_docs:
             cond = cond & ~F.col("has_pii")
-        filtered = _tap(
+        return run.tap(
             scored.filter(cond).withColumn(
                 "fingerprint", F.md5(F.coalesce(F.col("clean_text"), F.lit("")))
             ),
             "policy",
         )
-        if host_on:
-            # domain-reputation gate (the RefinedWeb-lineage prior) as a
-            # DIMENSION lookup: the stored rank generation — recomputed
-            # periodically by recompute_host_ranks over the ACCUMULATED
-            # edge table, NOT propagated per batch — broadcast-joins
-            # onto the batch. Until the first recompute there is no
-            # generation and no gate (the lambda split: per-batch work
-            # is batch-sized, the corpus-sized rank job is amortized
-            # maintenance, exactly like near-dedup compaction).
-            ranks = self.read_host_ranks(spark)
-            if ranks is not None:
-                gate = F.coalesce(F.col("host_trustrank_fp"), F.lit(0)) > 0 \
-                    if "host_trustrank_fp" in ranks.columns else F.lit(True)
-                if self.host_min_rank_pct is not None:
-                    cutoff = ranks.agg(
-                        F.percentile_approx(
-                            "host_pagerank_fp",
-                            float(self.host_min_rank_pct),
-                            10_000,
-                        ).alias("c")
-                    ).collect()[0]["c"]
-                    gate = gate & (F.col("host_pagerank_fp") >= F.lit(cutoff))
-                # __host rode along in the fused base projection — the
-                # rank attach is the broadcast join alone
-                filtered = _tap(
-                    filtered.join(
-                        F.broadcast(ranks.withColumnRenamed("host", "__host")),
-                        "__host",
-                        "left",
-                    )
-                    .filter(gate)
-                    .drop(*[c for c in ranks.columns if c != "host"]),
-                    "host",
+
+    def _host_gate(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 2: the domain-reputation gate (the RefinedWeb-lineage
+        prior) as a DIMENSION lookup. The stored rank generation —
+        recomputed periodically by recompute_host_ranks over the
+        ACCUMULATED edge table, NOT propagated per batch — broadcast-joins
+        onto the batch. Until the first recompute there is no generation
+        and no gate (the lambda split: per-batch work is batch-sized, the
+        corpus-sized rank job is amortized maintenance, exactly like
+        near-dedup compaction)."""
+        if not run.host_on:
+            return df
+        ranks = self.read_host_ranks(run.spark)
+        if ranks is not None:
+            gate = F.coalesce(F.col("host_trustrank_fp"), F.lit(0)) > 0 \
+                if "host_trustrank_fp" in ranks.columns else F.lit(True)
+            if self.host_min_rank_pct is not None:
+                cutoff = ranks.agg(
+                    F.percentile_approx(
+                        "host_pagerank_fp",
+                        float(self.host_min_rank_pct),
+                        10_000,
+                    ).alias("c")
+                ).collect()[0]["c"]
+                gate = gate & (F.col("host_pagerank_fp") >= F.lit(cutoff))
+            # __host rode along in the fused scrub projection — the rank
+            # attach is the broadcast join alone
+            df = run.tap(
+                df.join(
+                    F.broadcast(ranks.withColumnRenamed("host", "__host")),
+                    "__host",
+                    "left",
                 )
-            # the fused __host column served the gate (or no generation
-            # exists yet) — it must not leak into the curated table
-            filtered = filtered.drop("__host")
-        media_on = self.media_dedup and self.media_col in docs.columns
-        if media_on:
-            # media as a curation citizen (r9): the payload rides along
-            # into the curated table (the near-dup compaction hashes it)
-            # and its md5 — 'm|'-prefixed so it can share the text
+                .filter(gate)
+                .drop(*[c for c in ranks.columns if c != "host"]),
+                "host",
+            )
+        # the fused __host column served the gate (or no generation
+        # exists yet) — it must not leak into the curated table
+        return df.drop("__host")
+
+    def _exact_dedup(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 3: within-batch exact text and media dedup, then the
+        cross-batch anti-join against the fingerprint store."""
+        if run.media_on:
+            # media as a curation citizen: the payload rides along into
+            # the curated table (the near-dup compaction hashes it) and
+            # its md5 — 'm|'-prefixed so it can share the text
             # fingerprint store without key-space collision — drives
             # exact media dedup within the batch and across batches.
             # NULL payloads get a NULL media_fp: null keys never match
             # an equi/anti join, so docs without media are exempt.
-            filtered = filtered.join(
-                docs.select("doc_id", self.media_col), "doc_id"
+            df = df.join(
+                run.docs.select("doc_id", self.media_col), "doc_id"
             ).withColumn(
                 "media_fp",
                 F.when(
@@ -714,33 +778,30 @@ class CurationIngest:
         # (semi-join on the (fingerprint, min doc_id) pairs — map-side
         # partial agg, and the same fingerprint shuffle the store
         # anti-join below reuses)
-        batch_unique = _tap(
-            filtered.join(
-                filtered.groupBy("fingerprint").agg(
-                    F.min("doc_id").alias("doc_id")
-                ),
+        fresh = run.tap(
+            df.join(
+                df.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id")),
                 ["fingerprint", "doc_id"],
                 "left_semi",
             ),
             "exact_text",
         )
-        if media_on:
+        if run.media_on:
             # within-batch exact MEDIA dedup over the text survivors:
             # lowest doc_id represents each payload; computed post-text-
             # dedup so a text-dedup loser can't claim a media group's
             # representative slot and drag the whole group down with it
-            media_losers = batch_unique.filter(
+            media_losers = fresh.filter(
                 F.col("media_fp").isNotNull()
             ).join(
-                batch_unique.filter(F.col("media_fp").isNotNull())
+                fresh.filter(F.col("media_fp").isNotNull())
                 .groupBy("media_fp")
                 .agg(F.min("doc_id").alias("doc_id")),
                 ["media_fp", "doc_id"],
                 "left_anti",
             ).select("doc_id")
-            batch_unique = _tap(
-                batch_unique.join(media_losers, "doc_id", "left_anti"),
-                "exact_media",
+            fresh = run.tap(
+                fresh.join(media_losers, "doc_id", "left_anti"), "exact_media"
             )
         # cross-batch: drop anything an earlier batch already kept. The
         # store is read in parts — the bucketed compacted table (its scan
@@ -748,584 +809,419 @@ class CurationIngest:
         # not-yet-compacted segments (small: fingerprints since the last
         # compaction) — and anti-joined part by part so the bucketed
         # layout's co-location isn't destroyed by a union
-        fresh = batch_unique
-        for part in self.fingerprint_store_parts(spark):
+        for part in self.fingerprint_store_parts(run.spark):
             fresh = fresh.join(part, "fingerprint", "left_anti")
-            if media_on:
+            if run.media_on:
                 fresh = fresh.join(
                     part.withColumnRenamed("fingerprint", "media_fp"),
                     "media_fp",
                     "left_anti",
                 )
-        fresh = _tap(fresh, "store_dup")
-        media_bands_on = media_on and self.media_near_dedup
-        near_stages = int(self.text_near_dedup) + int(media_bands_on)
-        # FUSED VALVES (r16 floor cut): every near-dedup drop-set below
-        # derives from the ONE frame the valve checkpoint materializes,
-        # so the legacy second full-frame checkpoint between the text
-        # and media stages (one extra serialized job + batch-row
-        # materialization per batch) is gone. Equivalence: band/probe
-        # rows are per-row functions of one doc (restriction-stable),
-        # a store match against an id an earlier stage already dropped
-        # is an anti-join no-op, and the media in-batch pair set over
-        # the superset restricted to pairs whose SMALLER id survived
-        # the text stages equals the pair set computed over the text
-        # survivors. The one frequency-dependent step breaks that law:
-        # phash_near_dup's max_band_freq counts band frequency over its
-        # INPUT, so with the hot-band valve configured alongside text
-        # near-dedup the pair set is not restriction-stable and the
-        # legacy checkpointed base is kept for exactly that config.
-        fused = self.fused_valves and not (
-            media_bands_on
-            and self.text_near_dedup
-            and self.media_max_band_freq is not None
-        )
-        if near_stages:
-            # PLAN-SIZE VALVE (r11): each near-dedup stage below builds
-            # drop-sets FROM `fresh` and anti-joins them back INTO
-            # `fresh` — a self-referencing join that doubles the logical
-            # plan tree every time. With both text and media stages on,
-            # Catalyst ANALYSIS time (driver-side, not execution) grew
-            # exponentially: 146 s for a 20-doc batch, measured. An
-            # eager localCheckpoint of the batch-sized frame truncates
-            # the lineage so every stage references a flat scan; the
-            # work up to here runs exactly once (downstream reads the
-            # checkpointed blocks). Block loss on a real cluster kills
-            # the batch job, which the commit-marker replay discipline
-            # already converges — never wrong results.
-            fresh = fresh.localCheckpoint(eager=True)
-            ckpts.append(fresh)
-            _mark("valve_ckpt_funnel")
-        # the single materialized frame the fused drop-sets derive from
-        # (identical to `fresh` until the first anti-join below)
-        base = fresh
-        text_drop_sets: list[DataFrame] = []
-        if self.text_near_dedup:
-            # per-batch TEXT near-dedup against the stored MinHash band
-            # index (r10): the text twin of the phash band store below.
-            # Within the batch, exact-Jaccard-verified LSH pairs collapse
-            # to the smallest id; across batches, the probe is one
-            # equi-join on the single bkey long and the verify is
-            # SIGNATURE AGREEMENT (#equal minhash positions / k >=
-            # threshold — the MinHash Jaccard estimate), so it never
-            # touches corpus text and stays batch-bounded. The periodic
-            # compact_curated pass remains the exact-Jaccard authority;
-            # this is the bounded fast path for "near-copy of
-            # already-kept text". Band law constants (text_minhash_k /
-            # text_bands / text_shingle_w) are the store's schema —
-            # changing them invalidates the accumulated index, which the
-            # law marker turns into a loud failure.
-            from ..operators.dedup import minhash_band_rows, minhash_lsh_pairs
+        return run.tap(fresh, "store_dup")
 
-            self._enforce_band_law(self.text_bands_path, self._text_band_law())
-            batch_texts = base.select(
-                "doc_id", F.col("clean_text").alias("text")
-            )
-            in_batch = (
-                minhash_lsh_pairs(
-                    batch_texts,
-                    threshold=self.text_dedup_threshold,
-                    k=self.text_minhash_k,
-                    bands=self.text_bands,
-                    w=self.text_shingle_w,
-                )
-                .select(F.col("id_b").alias("doc_id"))
-                .distinct()
-            )
-            if fused:
-                text_drop_sets.append(in_batch)
-            fresh = _tap(
-                fresh.join(in_batch, "doc_id", "left_anti"), "text_near_batch"
-            )
-            # probe-side band rows (lazy, over the pre-persist chain);
-            # the rows APPENDED to the store are rebuilt from the
-            # persisted survivors in the commit block below, so the
-            # write does not re-evaluate this whole funnel chain. Fused:
-            # built from the flat `base` (a probe row for an id the
-            # in-batch stage already dropped can only re-drop it), so
-            # the probe tree references the checkpoint, not the chain.
-            probe_text_bands = minhash_band_rows(
-                (base if fused else fresh).select(
-                    "doc_id", F.col("clean_text").alias("text")
-                ),
-                id_col="doc_id",
+    def _text_near(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 4: per-batch TEXT near-dedup against the stored MinHash
+        band index, the text twin of the phash band store. Within the
+        batch, exact-Jaccard-verified LSH pairs collapse to the smallest
+        id; across batches, the probe is one equi-join on the single bkey
+        long and the verify is SIGNATURE AGREEMENT (#equal minhash
+        positions / k >= threshold — the MinHash Jaccard estimate), so it
+        never touches corpus text and stays batch-bounded. The periodic
+        compact_curated pass remains the exact-Jaccard authority; this is
+        the bounded fast path for "near-copy of already-kept text". Band
+        law constants (text_minhash_k / text_bands / text_shingle_w) are
+        the store's schema — changing them invalidates the accumulated
+        index, which the law marker turns into a loud failure.
+
+        ``df`` is the valve checkpoint. Both the in-batch pairs and the
+        store probe are built from it (a probe row for an id the in-batch
+        stage already dropped can only re-drop it), and the drop-sets are
+        kept on ``run`` for the media stage."""
+        if not self.text_near_dedup:
+            return df
+        from ..operators.dedup import minhash_band_rows, minhash_lsh_pairs
+
+        self._enforce_band_law(self.text_bands_path, self._text_band_law())
+        texts = df.select("doc_id", F.col("clean_text").alias("text"))
+        in_batch = (
+            minhash_lsh_pairs(
+                texts,
+                threshold=self.text_dedup_threshold,
                 k=self.text_minhash_k,
                 bands=self.text_bands,
                 w=self.text_shingle_w,
             )
-            k = self.text_minhash_k  # same constant the law string records
-            agree = F.aggregate(
-                F.zip_with(
-                    "sig", "_ssig", lambda a, b: (a == b).cast("int")
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
+            .select(F.col("id_b").alias("doc_id"))
+            .distinct()
+        )
+        run.text_drops.append(in_batch)
+        fresh = run.tap(
+            df.join(in_batch, "doc_id", "left_anti"), "text_near_batch"
+        )
+        # probe-side band rows only: the rows APPENDED to the store are
+        # rebuilt from the materialized survivors (_append_text_bands),
+        # so the write does not re-evaluate this whole funnel chain
+        probe = minhash_band_rows(
+            texts,
+            id_col="doc_id",
+            k=self.text_minhash_k,
+            bands=self.text_bands,
+            w=self.text_shingle_w,
+        )
+        k = self.text_minhash_k  # same constant the law string records
+        agree = F.aggregate(
+            F.zip_with("sig", "_ssig", lambda a, b: (a == b).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        for part in self.text_band_store_parts(run.spark):
+            near = (
+                probe.join(part.withColumnRenamed("sig", "_ssig"), "bkey")
+                .filter(agree / F.lit(float(k)) >= self.text_dedup_threshold)
+                .select(F.col("id").alias("doc_id"))
+                .distinct()
             )
-            for part in self.text_band_store_parts(spark):
-                near = (
-                    probe_text_bands.join(
-                        part.withColumnRenamed("sig", "_ssig"), "bkey"
-                    )
-                    .filter(agree / F.lit(float(k)) >= self.text_dedup_threshold)
-                    .select(F.col("id").alias("doc_id"))
-                    .distinct()
-                )
-                # ids matched against a later part may include ones an
-                # earlier part already dropped — the anti-join is
-                # idempotent, so no probe-side pruning bookkeeping
-                if fused:
-                    text_drop_sets.append(near)
-                fresh = fresh.join(near, "doc_id", "left_anti")
-            fresh = _tap(fresh, "text_near_store")
-        if media_bands_on and self.text_near_dedup and not fused:
-            # legacy second valve (media hot-band valve configured, or
-            # fused_valves=False): the media stage re-references `fresh`
-            # three ways (hash pass, in-batch pairs, band probes) —
-            # flatten the text stage's joins out of its base first
-            fresh = fresh.localCheckpoint(eager=True)
-            ckpts.append(fresh)
-            _mark("valve_ckpt_text_probe")
-        if media_bands_on:
-            # per-batch perceptual NEAR-dedup against the stored phash
-            # band index (r10): until now a perturbed copy of already-
-            # kept media survived every batch and only fell at the
-            # periodic compaction. The band store gives suppression at
-            # ingest with the fingerprint store's scale shape — the
-            # probe is an equi-join on the single bkey long, verified by
-            # codegen bit_count(XOR) <= max_hamming; the store grows
-            # with unique media, and compaction buckets it on bkey so
-            # the probe co-locates without re-shuffling the store.
-            from ..operators.multimodal import (
-                perceptual_hash,
-                phash_band_keys,
-                phash_near_dup,
-            )
+            # ids matched against a later part may include ones an
+            # earlier part already dropped — the anti-join is
+            # idempotent, so no probe-side pruning bookkeeping
+            run.text_drops.append(near)
+            fresh = fresh.join(near, "doc_id", "left_anti")
+        return run.tap(fresh, "text_near_store")
 
-            self._enforce_band_law(self.phash_bands_path, self._phash_band_law())
-            hashes = perceptual_hash(
-                (base if fused else fresh)
-                .filter(F.col(self.media_col).isNotNull())
-                .select(F.col("doc_id").alias("media_id"), self.media_col),
-                backend=self.media_backend,
-            )
-            # within-batch: drop any media with a SMALLER-id near-dup in
-            # the batch (pairs come id_a < id_b, so dropping every id_b
-            # collapses chains to their smallest member — slightly more
-            # aggressive than the compaction's connected-components
-            # retention on transitive chains, deterministically so)
-            pairs = phash_near_dup(
-                hashes,
-                max_hamming=self.media_max_hamming,
-                bands=self.media_bands,
-                max_band_freq=self.media_max_band_freq,
-            )
-            if fused and text_drop_sets:
-                # the pair set was generated over `base`, which still
-                # holds the text-stage losers; legacy semantics computed
-                # it over the text SURVIVORS, so a pair whose smaller id
-                # was text-dropped must not claim its larger sibling —
-                # restrict id_a to text survivors (id_b needs no filter:
-                # dropping an already-dropped id is a no-op)
-                tdrops = text_drop_sets[0]
-                for d in text_drop_sets[1:]:
-                    tdrops = tdrops.unionByName(d)
-                pairs = pairs.join(
-                    tdrops.withColumnRenamed("doc_id", "id_a"),
-                    "id_a",
-                    "left_anti",
-                )
-            in_batch_losers = pairs.select(
-                F.col("id_b").alias("doc_id")
-            ).distinct()
-            fresh = _tap(
-                fresh.join(in_batch_losers, "doc_id", "left_anti"),
-                "media_near_batch",
-            )
-            # probe-side band rows only (see the text twin above): the
-            # stored rows are rebuilt from the persisted survivors below.
-            # Fused: built from the full batch hashes (matches on ids an
-            # earlier stage dropped are anti-join no-ops), so no
-            # chain-referencing semi-join is needed.
-            probe_media_bands = phash_band_keys(
-                hashes if fused else hashes.join(
-                    fresh.select(F.col("doc_id").alias("media_id")),
-                    "media_id",
-                    "left_semi",
-                ),
-                bands=self.media_bands,
-            )
-            # cross-batch: a batch hash matching ANY stored band whose
-            # full hash verifies within max_hamming is a near-copy of
-            # already-kept media
-            for part in self.phash_band_store_parts(spark):
-                near = (
-                    probe_media_bands.join(
-                        part.withColumnRenamed("phash", "_sph"), "bkey"
-                    )
-                    .filter(
-                        F.bit_count(
-                            F.col("phash").bitwiseXOR(F.col("_sph"))
-                        )
-                        <= int(self.media_max_hamming)
-                    )
-                    .select(F.col("id").alias("doc_id"))
-                    .distinct()
-                )
-                fresh = fresh.join(near, "doc_id", "left_anti")
-            fresh = _tap(fresh, "media_near_store")
-        if self.assign_splits:
-            # split = salted hash of the exact fingerprint — a pure
-            # per-row function, so the assignment is identical to the
-            # batch operator's exact mode AND stable across batches
-            # (the same text always lands in the same split, no state)
-            from ..functions.texttools import md5_long
-            from ..operators.curation import SPLIT_SALT
+    def _media_near(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 5: per-batch perceptual NEAR-dedup against the stored
+        phash band index — a perturbed copy of already-kept media falls
+        at ingest, not only at the periodic compaction. The probe is an
+        equi-join on the single bkey long, verified by codegen
+        bit_count(XOR) <= max_hamming; the store grows with unique media,
+        and compaction buckets it on bkey so the probe co-locates without
+        re-shuffling the store.
 
-            bucket = (
-                md5_long(F.concat(F.lit(f"{SPLIT_SALT}|"), F.col("fingerprint")))
-                % 10
-            ).cast("int")
-            fresh = fresh.withColumn("split_bucket", bucket).withColumn(
-                "split",
-                F.when(bucket < 8, "train")
-                .when(bucket < 9, "val")
-                .otherwise("test"),
+        The hashes normally come from the valve checkpoint ``run.base``.
+        Equivalence with hashing the text survivors: band/probe rows are
+        per-row functions of one doc, a store match against an id an
+        earlier stage already dropped is an anti-join no-op, and the
+        in-batch pair set over the superset, restricted to pairs whose
+        SMALLER id survived the text stage, equals the pair set over the
+        text survivors. The one frequency-dependent step breaks that law:
+        phash_near_dup's ``max_band_freq`` counts band frequency over its
+        INPUT, so with the hot-band valve configured alongside text
+        near-dedup the text survivors are checkpointed a second time and
+        hashed instead."""
+        if not run.media_bands_on:
+            return df
+        from ..operators.multimodal import (
+            perceptual_hash,
+            phash_band_keys,
+            phash_near_dup,
+        )
+
+        two_ckpt = self.text_near_dedup and self.media_max_band_freq is not None
+        if two_ckpt:
+            # the media stage re-references the frame three ways (hash
+            # pass, in-batch pairs, band probes) — flatten the text
+            # stage's joins out of it first
+            df = run.checkpoint(df, "valve_ckpt_text_probe")
+        self._enforce_band_law(self.phash_bands_path, self._phash_band_law())
+        hashes = perceptual_hash(
+            (df if two_ckpt else run.base)
+            .filter(F.col(self.media_col).isNotNull())
+            .select(F.col("doc_id").alias("media_id"), self.media_col),
+            backend=self.media_backend,
+        )
+        # within-batch: drop any media with a SMALLER-id near-dup in the
+        # batch (pairs come id_a < id_b, so dropping every id_b collapses
+        # chains to their smallest member — slightly more aggressive
+        # than the compaction's connected-components retention on
+        # transitive chains, deterministically so)
+        pairs = phash_near_dup(
+            hashes,
+            max_hamming=self.media_max_hamming,
+            bands=self.media_bands,
+            max_band_freq=self.media_max_band_freq,
+        )
+        if run.text_drops and not two_ckpt:
+            # a pair whose smaller id was text-dropped must not claim its
+            # larger sibling — restrict id_a to text survivors (id_b
+            # needs no filter: dropping an already-dropped id is a no-op)
+            tdrops = run.text_drops[0]
+            for d in run.text_drops[1:]:
+                tdrops = tdrops.unionByName(d)
+            pairs = pairs.join(
+                tdrops.withColumnRenamed("doc_id", "id_a"), "id_a", "left_anti"
             )
-        # MATERIALIZE the survivors with an eager localCheckpoint, NOT
-        # persist() (r11 data-loss fix): the appends below write into
-        # the very store paths `fresh`'s plan READS (fps store, band
-        # stores), and Spark's CacheManager recacheByPath responds to
-        # each such write by RECOMPUTING any cached plan that reads the
-        # path — with a fresh file listing that now includes the
-        # segment just written, so the batch matched its OWN band rows
-        # (signature agreement 16/16) and recached as EMPTY: every
-        # append after the first wrote zero rows, silently losing the
-        # batch's fingerprints (latent since r10; caught by the r11
-        # all-stores soak). localCheckpoint truncates lineage to a
-        # LogicalRDD — no path reference survives for recacheByPath to
-        # find, so every downstream append reads the same materialized
-        # blocks regardless of write order.
+        in_batch_losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        fresh = run.tap(
+            df.join(in_batch_losers, "doc_id", "left_anti"), "media_near_batch"
+        )
+        # probe-side band rows only (see the text twin): the stored rows
+        # are rebuilt from the materialized survivors. From the full
+        # batch hashes unless the second checkpoint was taken.
+        probe = phash_band_keys(
+            hashes.join(
+                fresh.select(F.col("doc_id").alias("media_id")),
+                "media_id",
+                "left_semi",
+            ) if two_ckpt else hashes,
+            bands=self.media_bands,
+        )
+        # cross-batch: a batch hash matching ANY stored band whose full
+        # hash verifies within max_hamming is a near-copy of already-kept
+        # media
+        for part in self.phash_band_store_parts(run.spark):
+            near = (
+                probe.join(part.withColumnRenamed("phash", "_sph"), "bkey")
+                .filter(
+                    F.bit_count(F.col("phash").bitwiseXOR(F.col("_sph")))
+                    <= int(self.media_max_hamming)
+                )
+                .select(F.col("id").alias("doc_id"))
+                .distinct()
+            )
+            fresh = fresh.join(near, "doc_id", "left_anti")
+        return run.tap(fresh, "media_near_store")
+
+    def _assign_split(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 6: split = salted hash of the exact fingerprint — a pure
+        per-row function, so the assignment is identical to the batch
+        operator's exact mode AND stable across batches (the same text
+        always lands in the same split, no state)."""
+        if not self.assign_splits:
+            return df
+        from ..functions.texttools import md5_long
+        from ..operators.curation import SPLIT_SALT
+
+        bucket = (
+            md5_long(F.concat(F.lit(f"{SPLIT_SALT}|"), F.col("fingerprint"))) % 10
+        ).cast("int")
+        return df.withColumn("split_bucket", bucket).withColumn(
+            "split",
+            F.when(bucket < 8, "train").when(bucket < 9, "val").otherwise("test"),
+        )
+
+    def _materialize(self, run: _BatchRun, df: DataFrame) -> DataFrame:
+        """Gate 7a: MATERIALIZE the survivors with an eager
+        localCheckpoint, NOT persist() (the recache data-loss fix): the
+        store appends write into the very store paths the survivor plan
+        READS (fps store, band stores), and Spark's CacheManager
+        recacheByPath responds to each such write by RECOMPUTING any
+        cached plan that reads the path — with a fresh file listing that
+        now includes the segment just written, so the batch matched its
+        OWN band rows and recached as EMPTY: every append after the first
+        wrote zero rows, silently losing the batch's fingerprints.
+        localCheckpoint truncates lineage to a LogicalRDD — no path
+        reference survives for recacheByPath to find, so every append
+        reads the same materialized blocks regardless of write order."""
         if self.plan_probe is not None:
-            self.plan_probe("final", fresh)
-        fresh = fresh.localCheckpoint(eager=True)
-        ckpts.append(fresh)
-        _mark("materialize")
-        try:
-            (
-                fresh.withColumn("batch_id", F.lit(seg))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .parquet(self.curated_path)
+            self.plan_probe("final", df)
+        return run.checkpoint(df, "materialize")
+
+    def _commit(
+        self, run: _BatchRun, fresh: DataFrame, batch_id: int | None
+    ) -> None:
+        """Gate 7b: the curated write, the independent store appends, the
+        stats row, then the commit marker — in that order, so a crash
+        anywhere before the marker replays the whole batch.
+
+        Every store append reads the checkpointed survivors (or the raw
+        batch, for host edges); none depends on another and the marker
+        waits for all of them, so they run CONCURRENTLY from driver
+        threads (_run_concurrently): at small batches each append is a
+        tiny job that leaves the executors mostly idle, and running them
+        one by one paid one full job-scheduling latency per store. A
+        failure in ANY append fails the batch before the marker, and the
+        replay clears every partial segment."""
+        _append_segment(fresh, self.curated_path, run.seg)
+        run.mark("curated_write")
+        appends = {}
+        if self.text_index:
+            appends["text_index_append"] = self._append_text_index
+        if self.vector_index and (
+            self.vec_col in run.docs.columns or self.embed_dim is not None
+        ):
+            appends["vector_index_append"] = self._append_vector_index
+        if run.host_on and self.host_links_col in run.docs.columns:
+            appends["host_edges_append"] = self._append_host_edges
+        if run.media_bands_on:
+            appends["phash_bands_append"] = self._append_phash_bands
+        if self.text_near_dedup:
+            appends["text_bands_append"] = self._append_text_bands
+        appends["fps_append"] = self._append_fps
+        run.walls.update(
+            _run_concurrently(
+                run.spark,
+                {name: partial(fn, run, fresh) for name, fn in appends.items()},
             )
-            _mark("curated_write")
-            # ---- independent store appends (r12 floor cut) -------------
-            # Every append below reads the checkpointed `fresh` (or the
-            # raw `docs` for host edges); none depends on another, and
-            # the commit marker is written only after ALL complete, so
-            # ORDER is free (the pre-r11 "before the fingerprint append"
-            # ordering stopped being load-bearing with the checkpoint
-            # valves). They therefore run CONCURRENTLY from driver
-            # threads: at small batches each append is a tiny job that
-            # leaves local[N] (or a cluster) mostly idle, and the
-            # sequential form paid one full job-scheduling latency per
-            # store — the dominant share of the all-stores per-batch
-            # floor after the r12 stats-row cut. Spark's scheduler is
-            # thread-safe (pinned-thread mode maps each Python thread to
-            # its own JVM thread); a failure in ANY append fails the
-            # batch before the marker, exactly as the sequential form
-            # did, and the replay clears every partial segment.
-            # `parallel_appends=False` keeps the sequential form for A/B.
-            appends: list = []
+        )
+        run.mark("store_appends_total")
+        # the observability record: every tap was populated by the
+        # curated write's job above (Observation.get is already resolved
+        # — no extra Spark action), and the row lands INSIDE the commit
+        # envelope (cleared on replay, sealed by the marker below) so
+        # redelivery leaves exactly one stats row per batch
+        self._write_stats_row_driver_side(self._ingest_stats_row(run.taps), run.seg)
+        run.mark("stats_row_write")
+        if batch_id is not None:
+            self._write_marker(run.seg)
 
-            if self.text_index:
-                # the curated batch becomes a name-keyed index segment:
-                # a replayed batch overwrites its own segment (converges),
-                # and the empty bootstrap generation means NO batch ever
-                # initializes the index from data — the crash window
-                # "init succeeded, marker didn't" can't double-count.
-                # (`fresh` is an eager localCheckpoint: lineage is
-                # truncated, so no write order can trigger a
-                # re-evaluation that would see the batch's own
-                # fingerprints — the pre-r11 eviction/recache hazards
-                # are structurally gone; lost blocks fail the job and
-                # the marker discipline replays it.)
-                from ..operators.search import append_text_index, init_text_index
+    # -- per-batch store appends (each writes its own batch-keyed segment) --
 
-                def _do_text_index() -> None:
-                    if self._text_index_law is None:
-                        # one init + stats read per ingest OBJECT, not
-                        # per batch: n_buckets/positional are immutable
-                        # for the store's life (init fixes them,
-                        # compaction preserves them) — re-reading them
-                        # was two fixed collect jobs per batch
-                        info = init_text_index(
-                            spark,
-                            self.index_path,
-                            n_buckets=self.text_index_buckets,
-                        )
-                        self._text_index_law = (
-                            int(info["n_buckets"]),
-                            bool(info["positional"]),
-                        )
-                    append_text_index(
-                        fresh.select(
-                            "doc_id", F.col("clean_text").alias("text")
-                        ),
-                        self.index_path,
-                        seg,
-                        law=self._text_index_law,
-                        return_stats=False,
-                    )
+    def _append_text_index(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """The curated batch becomes a name-keyed text-index segment: a
+        replayed batch overwrites its own segment (converges), and the
+        empty bootstrap generation means NO batch ever initializes the
+        index from data — the crash window "init succeeded, marker
+        didn't" can't double-count."""
+        from ..operators.search import append_text_index, init_text_index
 
-                appends.append(("text_index_append", _do_text_index))
-            embed_fallback = (
-                self.vector_index
-                and self.vec_col not in docs.columns
-                and self.embed_dim is not None
+        if self._text_index_law is None:
+            # one init + stats read per ingest OBJECT, not per batch:
+            # n_buckets/positional are immutable for the store's life
+            # (init fixes them, compaction preserves them) — re-reading
+            # them was two fixed collect jobs per batch
+            info = init_text_index(
+                run.spark, self.index_path, n_buckets=self.text_index_buckets
             )
-            if self.vector_index and (
-                self.vec_col in docs.columns or embed_fallback
-            ):
-                # the curated batch's embeddings become a name-keyed
-                # segment of the stored vector index — same replay
-                # contract as the text index above. Init is
-                # bootstrap-only (seed centroids, no data), so a crashed
-                # init + replay cannot double-index; dim is inferred
-                # from the first embedded batch.
-                from ..operators.vecindex import (
-                    _gen_name as _vec_gen,
-                    append_vector_index,
-                    init_vector_index,
+            self._text_index_law = (
+                int(info["n_buckets"]),
+                bool(info["positional"]),
+            )
+        append_text_index(
+            fresh.select("doc_id", F.col("clean_text").alias("text")),
+            self.index_path,
+            run.seg,
+            law=self._text_index_law,
+            return_stats=False,
+        )
+
+    def _append_vector_index(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """The curated batch's embeddings become a name-keyed segment of
+        the stored vector index — same replay contract as the text index.
+        Init is bootstrap-only (seed centroids, no data), so a crashed
+        init + replay cannot double-index; dim is inferred from the first
+        embedded batch."""
+        from ..operators.vecindex import (
+            _gen_name as _vec_gen,
+            append_vector_index,
+            init_vector_index,
+        )
+
+        if self.vec_col not in run.docs.columns:
+            # no embedding column in the stream: derive vectors from the
+            # survivors' text with the deterministic hashed-projection
+            # embedder — the vector index runs on a TEXT-ONLY corpus with
+            # no external model
+            from ..operators.similarity import hashed_text_embeddings
+            from ..plans.genstore import enforce_law
+
+            # the embedding law is part of the store's key space exactly
+            # like a band law: record at first use, fail loudly on
+            # mismatch (see _embed_law)
+            enforce_law(
+                self.vector_index_path,
+                self._embed_law(),
+                marker=EMBED_LAW_MARKER,
+                what="vector index embedding law",
+            )
+            vecs = (
+                hashed_text_embeddings(
+                    fresh.select("doc_id", F.col("clean_text").alias("text")),
+                    dim=self.embed_dim,
+                    ngram=self.embed_ngram,
                 )
-
-                def _do_vector_index() -> None:
-                    if embed_fallback:
-                        # no embedding column in the stream: derive
-                        # vectors from the survivors' text with the
-                        # deterministic hashed-projection embedder (r11)
-                        # — the vector index runs on a TEXT-ONLY corpus
-                        # with no external model. Reading the persisted
-                        # `fresh` keeps the rebuild-from-survivors
-                        # contract of the other appends.
-                        from ..operators.similarity import (
-                            hashed_text_embeddings,
-                        )
-                        from ..plans.genstore import enforce_law
-
-                        # the embedding law is part of the store's key
-                        # space exactly like a band law: record at first
-                        # use, fail loudly on mismatch (see _embed_law)
-                        enforce_law(
-                            self.vector_index_path,
-                            self._embed_law(),
-                            marker=EMBED_LAW_MARKER,
-                            what="vector index embedding law",
-                        )
-                        vecs = (
-                            hashed_text_embeddings(
-                                fresh.select(
-                                    "doc_id",
-                                    F.col("clean_text").alias("text"),
-                                ),
-                                dim=self.embed_dim,
-                                ngram=self.embed_ngram,
-                            )
-                            .withColumnRenamed("embedding", self.vec_col)
-                            # exact-zero vectors (signs cancelled) carry
-                            # no signal and would cosine to NaN at probe
-                            .filter(F.exists(self.vec_col, lambda x: x != 0))
-                        )
-                    else:
-                        vecs = fresh.join(
-                            docs.select("doc_id", self.vec_col), "doc_id"
-                        ).filter(F.col(self.vec_col).isNotNull())
-                    if _vec_gen(self.vector_index_path) is None:
-                        probe_row = vecs.select(self.vec_col).first()
-                        if probe_row is not None:
-                            init_vector_index(
-                                spark,
-                                self.vector_index_path,
-                                dim=len(probe_row[0]),
-                                n_lists=self.vector_n_lists,
-                            )
-                    if _vec_gen(self.vector_index_path) is not None:
-                        append_vector_index(
-                            vecs.select("doc_id", self.vec_col),
-                            self.vector_index_path,
-                            seg,
-                            id_col="doc_id",
-                            vec_col=self.vec_col,
-                            # generation-keyed: a compaction between
-                            # batches invalidates it exactly
-                            centroid_cache=self._vec_centroid_cache,
-                        )
-
-                appends.append(("vector_index_append", _do_vector_index))
-            if host_on and self.host_links_col in docs.columns:
-                # the batch's host links accrete into the edge store the
-                # periodic rank recompute reads. Derived from the RAW
-                # batch (spam hosts' links inform the graph — that is
-                # how TrustRank isolates them), batch-keyed like every
-                # other append so a replay overwrites its own segment;
-                # duplicate edges across batches are harmless because
-                # the recompute reads the store as a SET (distinct).
-                from ..operators.graph import host_edges
-
-                def _do_host_edges() -> None:
-                    (
-                        host_edges(
-                            docs,
-                            host_col=self.host_col,
-                            links_col=self.host_links_col,
-                        )
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.host_edges_path)
-                    )
-
-                appends.append(("host_edges_append", _do_host_edges))
-            if media_bands_on:
-                # survivors' band keys accrete into the phash band
-                # store, REBUILT from the checkpointed `fresh` (one
-                # Arrow hashing pass over the materialized survivors —
-                # rebuilding beats dragging the probe chain through the
-                # write: −21% on the all-stores integration test).
-                from ..operators.multimodal import (
-                    perceptual_hash as _ph,
-                    phash_band_keys as _pbk,
+                .withColumnRenamed("embedding", self.vec_col)
+                # exact-zero vectors (signs cancelled) carry no signal
+                # and would cosine to NaN at probe
+                .filter(F.exists(self.vec_col, lambda x: x != 0))
+            )
+        else:
+            vecs = fresh.join(
+                run.docs.select("doc_id", self.vec_col), "doc_id"
+            ).filter(F.col(self.vec_col).isNotNull())
+        if _vec_gen(self.vector_index_path) is None:
+            probe_row = vecs.select(self.vec_col).first()
+            if probe_row is not None:
+                init_vector_index(
+                    run.spark,
+                    self.vector_index_path,
+                    dim=len(probe_row[0]),
+                    n_lists=self.vector_n_lists,
                 )
+        if _vec_gen(self.vector_index_path) is not None:
+            append_vector_index(
+                vecs.select("doc_id", self.vec_col),
+                self.vector_index_path,
+                run.seg,
+                id_col="doc_id",
+                vec_col=self.vec_col,
+                # generation-keyed: a compaction between batches
+                # invalidates it exactly
+                centroid_cache=self._vec_centroid_cache,
+            )
 
-                def _do_phash_bands() -> None:
-                    (
-                        _pbk(
-                            _ph(
-                                fresh.filter(
-                                    F.col(self.media_col).isNotNull()
-                                ).select(
-                                    F.col("doc_id").alias("media_id"),
-                                    self.media_col,
-                                ),
-                                backend=self.media_backend,
-                            ),
-                            bands=self.media_bands,
-                        )
-                        .select("bkey", "phash")
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.phash_bands_path)
-                    )
+    def _append_host_edges(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """The batch's host links accrete into the edge store the
+        periodic rank recompute reads. Derived from the RAW batch (spam
+        hosts' links inform the graph — that is how TrustRank isolates
+        them); duplicate edges across batches are harmless because the
+        recompute reads the store as a SET (distinct)."""
+        from ..operators.graph import host_edges
 
-                appends.append(("phash_bands_append", _do_phash_bands))
-            if self.text_near_dedup:
-                # same rebuild-from-checkpoint shape as the phash store
-                from ..operators.dedup import minhash_band_rows as _mbr
+        _append_segment(
+            host_edges(
+                run.docs, host_col=self.host_col, links_col=self.host_links_col
+            ),
+            self.host_edges_path,
+            run.seg,
+        )
 
-                def _do_text_bands() -> None:
-                    (
-                        _mbr(
-                            fresh.select(
-                                "doc_id", F.col("clean_text").alias("text")
-                            ),
-                            id_col="doc_id",
-                            k=self.text_minhash_k,
-                            bands=self.text_bands,
-                            w=self.text_shingle_w,
-                        )
-                        .select("bkey", "sig")
-                        .withColumn("batch_id", F.lit(seg))
-                        .write.mode("append")
-                        .partitionBy("batch_id")
-                        .parquet(self.text_bands_path)
-                    )
+    def _append_phash_bands(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """Survivors' band keys accrete into the phash band store,
+        REBUILT from the checkpointed survivors (one Arrow hashing pass
+        over the materialized rows — rebuilding beats dragging the probe
+        chain through the write: −21% on the all-stores integration
+        test)."""
+        from ..operators.multimodal import perceptual_hash, phash_band_keys
 
-                appends.append(("text_bands_append", _do_text_bands))
+        hashes = perceptual_hash(
+            fresh.filter(F.col(self.media_col).isNotNull()).select(
+                F.col("doc_id").alias("media_id"), self.media_col
+            ),
+            backend=self.media_backend,
+        )
+        _append_segment(
+            phash_band_keys(hashes, bands=self.media_bands).select("bkey", "phash"),
+            self.phash_bands_path,
+            run.seg,
+        )
 
-            def _do_fps() -> None:
-                fps_out = fresh.select("fingerprint")
-                if media_on:
-                    fps_out = fps_out.unionByName(
-                        fresh.filter(F.col("media_fp").isNotNull()).select(
-                            F.col("media_fp").alias("fingerprint")
-                        )
-                    )
-                (
-                    fps_out.withColumn("batch_id", F.lit(seg))
-                    .write.mode("append")
-                    .partitionBy("batch_id")
-                    .parquet(self.fps_path)
+    def _append_text_bands(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """Same rebuild-from-checkpoint shape as the phash band store."""
+        from ..operators.dedup import minhash_band_rows
+
+        _append_segment(
+            minhash_band_rows(
+                fresh.select("doc_id", F.col("clean_text").alias("text")),
+                id_col="doc_id",
+                k=self.text_minhash_k,
+                bands=self.text_bands,
+                w=self.text_shingle_w,
+            ).select("bkey", "sig"),
+            self.text_bands_path,
+            run.seg,
+        )
+
+    def _append_fps(self, run: _BatchRun, fresh: DataFrame) -> None:
+        """The survivors' exact text (and 'm|' media) fingerprints join
+        the store later batches anti-join."""
+        fps = fresh.select("fingerprint")
+        if run.media_on:
+            fps = fps.unionByName(
+                fresh.filter(F.col("media_fp").isNotNull()).select(
+                    F.col("media_fp").alias("fingerprint")
                 )
-
-            appends.append(("fps_append", _do_fps))
-
-            def _timed_append(stage: str, fn) -> None:
-                t0 = _time.perf_counter()
-                fn()
-                walls[stage] = round(_time.perf_counter() - t0, 3)
-
-            if self.parallel_appends and len(appends) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark import inheritable_thread_target
-
-                # inheritable_thread_target propagates THIS thread's
-                # JVM-local properties (the streaming job group,
-                # description, scheduler pool) AND the session's tags
-                # into the worker thread — without it, a
-                # StreamingQuery.stop() could no longer cancel
-                # in-flight append jobs and a FAIR pool would be
-                # silently dropped (r12 review); the session-form
-                # wrapper also carries interrupt tags. In legacy
-                # NON-pinned-thread mode (PYSPARK_PIN_THREAD=false)
-                # the session form returns the session itself, not a
-                # decorator (properties are process-global there, so
-                # there is nothing to propagate) — fall back to the
-                # plain callable rather than TypeError every batch
-                # (r12 advice).
-                deco = inheritable_thread_target(spark)
-                if not callable(deco) or isinstance(deco, SparkSession):
-                    deco = lambda f: f  # noqa: E731 — non-pinned mode
-                with ThreadPoolExecutor(
-                    max_workers=len(appends),
-                    thread_name_prefix="store-append",
-                ) as ex:
-                    futures = [
-                        ex.submit(deco(_timed_append), s, fn)
-                        for s, fn in appends
-                    ]
-                    # surface the FIRST failure after all settle (each
-                    # append owns its segment; partial writes are
-                    # cleared by the replay) — the marker below is
-                    # reached only if every append succeeded
-                    for fu in futures:
-                        fu.result()
-            else:
-                for s, fn in appends:
-                    _timed_append(s, fn)
-            _mark("store_appends_total")
-            if self.ingest_stats:
-                # the observability record (r11): every tap was populated
-                # by the curated write's job above (Observation.get is
-                # already resolved — no extra Spark action), and the row
-                # lands INSIDE the commit envelope (cleared on replay,
-                # sealed by the marker below) so redelivery leaves
-                # exactly one stats row per batch. Written DRIVER-SIDE
-                # with pyarrow (r12 floor cut): a
-                # createDataFrame([row]).write job measured 4-5 s of
-                # pure overhead (Python-RDD conversion + job scheduling)
-                # for one row — ~20% of the all-stores per-batch floor.
-                self._write_stats_row_driver_side(
-                    self._ingest_stats_row(taps), seg
-                )
-                _mark("stats_row_write")
-            if batch_id is not None:
-                self._write_marker(seg)
-        finally:
-            # free every checkpoint valve's blocks NOW — each batch took
-            # up to three (plan-size valves + the final materialization)
-            for df_ in ckpts:
-                _free_local_checkpoint(df_)
+            )
+        _append_segment(fps, self.fps_path, run.seg)
 
     # -- per-batch observability (r11) -------------------------------------
 

@@ -67,6 +67,46 @@ def _checkpoint_run_id(checkpoint_dir: str) -> str:
     return run_id.strip()
 
 
+def _run_concurrently(spark, fns: dict) -> dict[str, float]:
+    """Run independent named jobs (name -> zero-argument callable) from
+    concurrent driver threads and return each one's wall seconds.
+
+    Threads are wrapped by ``inheritable_thread_target``, which copies
+    the caller's JVM-local properties (job group, description, scheduler
+    pool) and the session's tags into each worker: a plain pool thread
+    starts with none of them, so a ``StreamingQuery.stop()`` could not
+    cancel the jobs and a FAIR pool would be dropped. In non-pinned
+    thread mode (``PYSPARK_PIN_THREAD=false``) the session form returns
+    the session, not a decorator; properties are process-global there,
+    so the plain callable is used. Every job settles before the first
+    failure is re-raised, so a failed batch leaves no job still writing
+    behind the caller's replay. A single job runs inline."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    walls: dict[str, float] = {}
+
+    def timed(name: str, fn) -> None:
+        t0 = time.perf_counter()
+        fn()
+        walls[name] = round(time.perf_counter() - t0, 3)
+
+    if len(fns) == 1:
+        timed(*next(iter(fns.items())))
+        return walls
+    deco = inheritable_thread_target(spark)
+    if not callable(deco) or isinstance(deco, SparkSession):
+        deco = lambda f: f  # noqa: E731 — non-pinned mode
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(deco(timed), n, fn) for n, fn in fns.items()]
+        for fu in futures:
+            fu.result()
+    return walls
+
+
 def _swap_generation(df: DataFrame, path: str) -> None:
     """Generational overwrite behind an atomic pointer (the
     fingerprint-store discipline): the new generation is fully written,
@@ -146,54 +186,38 @@ class IngestPipeline:
         try:
             # The three MVs are mutually independent — different target
             # paths, separate writer locks, each replay-convergent on
-            # its own — so their jobs OVERLAP from a small thread pool
-            # (guide §2.6): each sink's tail leaves executors idle that
-            # the next sink's tasks back-fill; serial execution paid
-            # three full job latencies per micro-batch. Crash semantics
-            # are unchanged: any sink failing fails the batch, and a
-            # foreachBatch redelivery converges per sink exactly as
-            # before (batch-keyed history segment, idempotent upserts).
-            # Calls go through the module attribute so test
-            # crash-injection monkeypatching still intercepts them.
-            from concurrent.futures import ThreadPoolExecutor
-
+            # its own — so their jobs OVERLAP from driver threads (guide
+            # §2.6): each sink's tail leaves executors idle that the
+            # next sink's tasks back-fill. Any sink failing fails the
+            # batch, and a foreachBatch redelivery converges per sink
+            # (batch-keyed history segment, idempotent upserts). Calls
+            # go through the module attribute so test crash-injection
+            # monkeypatching still intercepts them.
             now_col = F.lit(self.now).cast("timestamp") if self.now else None
             combined = to_combined(clean, now=now_col)
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                sinks = [
+            _run_concurrently(
+                clean.sparkSession,
+                {
                     # MV 1: history append (schema-local.sql:199-293 →
                     # 183-187); batch-keyed → replay overwrites instead
                     # of duplicating
-                    pool.submit(
-                        tables.append_history,
+                    "history": lambda: tables.append_history(
                         clean,
                         self.history_path,
                         batch_id=self._scoped_batch(batch_id),
                     ),
                     # MV 2: current-state upsert (schema-local.sql:384-446
                     # → 370-372)
-                    pool.submit(
-                        tables.upsert_state,
-                        clean,
-                        self.state_path,
-                        ttl=self.cfg.state_ttl,
-                        now=self.now,
+                    "state": lambda: tables.upsert_state(
+                        clean, self.state_path, ttl=self.cfg.state_ttl, now=self.now
                     ),
                     # MV 3: combined projection upsert
                     # (schema-global-combined.sql:42-108)
-                    pool.submit(
-                        tables.upsert_state,
-                        combined,
-                        self.combined_path,
-                        ttl="1 hour",
-                        now=self.now,
+                    "combined": lambda: tables.upsert_state(
+                        combined, self.combined_path, ttl="1 hour", now=self.now
                     ),
-                ]
-                # surface the FIRST failure (after letting all finish —
-                # the pool's __exit__ joins anyway) so a crashed sink
-                # fails the batch exactly like the serial cascade did
-                for f in sinks:
-                    f.result()
+                },
+            )
             # derived live view: conflicts among CURRENT positions. Runs
             # after the state upsert so the batch's own reports are in
             # play; cost is bounded by the active-aircraft count (the

@@ -129,27 +129,24 @@ def test_signal_builders_match_driver_rows(spark, docs):
     assert qual[6]["dup_bigram_frac"] > 0.9        # looped boilerplate
     assert qual[2]["dup_bigram_frac"] <= 0.2
     assert qual[8]["quality_score"] == 0.0         # NULL text
-
-
-def test_quality_rep_kernels_agree(spark, docs):
-    """The arrow repetition kernel (per-doc mapInPandas, r15) and the
-    groupBy kernel yield IDENTICAL quality_signals rows — including
-    NULL text, empty text, and single-token docs (no bigrams: counts
-    coalesce to 0 on both paths)."""
-    import pytest as _pytest
-
-    extra = spark.createDataFrame(
+    # the degenerate repetition rows: NULL text, empty text and a single
+    # token have no bigrams (the left join's NULL counts coalesce to 0);
+    # "a b a b a b" has 5 bigrams, "a b" x3 and "b a" x2, so
+    # top = 3/5 and dup = (3+2)/5
+    edge = spark.createDataFrame(
         [(100, None), (101, ""), (102, "one"), (103, "a b a b a b")],
         "doc_id long, text string",
     )
-    corpus = docs.select("doc_id", "text").unionByName(extra)
-    a = sorted(map(tuple, C.quality_signals(corpus).collect()))
-    b = sorted(
-        map(tuple, C.quality_signals(corpus, rep_kernel="arrow").collect())
-    )
-    assert a == b and len(a) == corpus.count()
-    with _pytest.raises(ValueError):
-        C.quality_signals(corpus, rep_kernel="nope")
+    got = {
+        r["doc_id"]: (r["top_bigram_frac"], r["dup_bigram_frac"])
+        for r in C.quality_signals(edge).collect()
+    }
+    assert got == {
+        100: (0.0, 0.0),
+        101: (0.0, 0.0),
+        102: (0.0, 0.0),
+        103: (0.6, 1.0),
+    }
 
 
 def test_domain_mixture_alpha_one_is_natural_proportions(spark):

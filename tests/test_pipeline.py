@@ -104,6 +104,42 @@ def test_crash_between_append_and_commit_replays_exactly_once(spark, tmp_base, m
     assert tables.read_state(spark, pipe.state_path).count() > 0
 
 
+def test_sinks_run_in_the_callers_job_group(spark, tmp_base, monkeypatch):
+    """The sink threads inherit the caller's JVM-local properties: a
+    streaming ``query.stop()`` cancels in-flight jobs by job group, and a
+    FAIR scheduler pool is a local property too. A bare pool thread
+    reads the job group as None."""
+    sc = spark.sparkContext
+    seen = {}
+    real_history, real_upsert = tables.append_history, tables.upsert_state
+
+    def recording_history(*a, **kw):
+        seen["history"] = sc.getLocalProperty("spark.jobGroup.id")
+        return real_history(*a, **kw)
+
+    def recording_upsert(df, path, **kw):
+        seen[path] = sc.getLocalProperty("spark.jobGroup.id")
+        return real_upsert(df, path, **kw)
+
+    monkeypatch.setattr(tables, "append_history", recording_history)
+    monkeypatch.setattr(tables, "upsert_state", recording_upsert)
+    pipe = IngestPipeline(GLOBAL_STREAM, tmp_base, now=NOW, run_id="runA")
+    raw = raw_batch(spark, GLOBAL_STREAM, n_aircraft=3, n_scrapes=1, with_edges=False)
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {p: sc.getLocalProperty(p) for p in props}
+    sc.setJobGroup("caller-group", "sink job-group test")
+    try:
+        pipe.process_batch(raw, batch_id=0)
+    finally:
+        for p, v in saved.items():
+            sc.setLocalProperty(p, v)
+    assert seen == {
+        "history": "caller-group",
+        pipe.state_path: "caller-group",
+        pipe.combined_path: "caller-group",
+    }
+
+
 def test_checkpoint_reset_loses_no_new_data(spark, tmp_base):
     """A deleted/recreated checkpoint restarts Spark batch ids at 0. The
     run-id scope (pinned inside the checkpoint dir) must keep the new

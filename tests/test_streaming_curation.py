@@ -913,13 +913,16 @@ def test_text_near_dedup_suppresses_at_ingest(spark, tmp_path):
 
 
 def test_fused_valves_match_legacy_two_checkpoint_path(spark, tmp_path):
-    """The r16 fused-valve funnel (every near-dedup drop-set derived
-    from the single valve_ckpt_funnel checkpoint) keeps EXACTLY the
-    legacy two-checkpoint semantics, including the subtle case the id_a
+    """The fused-valve funnel (every near-dedup drop-set derived from
+    the single valve_ckpt_funnel checkpoint) keeps EXACTLY the
+    two-checkpoint semantics, including the subtle case the id_a
     restriction exists for: a media near-dup pair whose SMALLER id was
-    dropped by the text stage must not claim its larger sibling (legacy
-    computed media pairs over the text survivors, where that pair never
-    existed). Curated sets and every per-gate drop count must match."""
+    dropped by the text stage must not claim its larger sibling (the
+    two-checkpoint form computes media pairs over the text survivors,
+    where that pair never exists). Curated sets and every per-gate drop
+    count must match. The two-checkpoint run reaches that form through
+    a hot-band cap no band reaches (phash_near_dup drops only bands
+    with count > the cap), so its pair set is the uncapped one."""
     A, B, Bp, C = _media_payloads()
     _NEAR_A3 = _NEAR_A.replace("market", "harbor")
     schema = "doc_id long, text string, payload binary"
@@ -945,7 +948,8 @@ def test_fused_valves_match_legacy_two_checkpoint_path(spark, tmp_path):
         base = tmp_path / mode
         ing = CurationIngest(
             str(base), run_id="r1", media_dedup=True, media_near_dedup=True,
-            text_near_dedup=True, fused_valves=fused,
+            text_near_dedup=True,
+            media_max_band_freq=None if fused else 10**6,
         )
         walls = {}
         for bid, rows in ((0, b0), (1, b1)):
@@ -986,12 +990,11 @@ def test_fused_valves_fall_back_under_media_hot_band_valve(spark, tmp_path):
     """phash_near_dup's max_band_freq counts band frequency over its
     INPUT, so the fused pair set (over the pre-text base) is not
     restriction-stable — with the hot-band valve configured alongside
-    text near-dedup the funnel must keep the legacy second checkpoint
-    even when fused_valves=True."""
+    text near-dedup the funnel must keep the second checkpoint."""
     A, B, Bp, C = _media_payloads()
     ing = CurationIngest(
         str(tmp_path), run_id="r1", media_dedup=True, media_near_dedup=True,
-        text_near_dedup=True, media_max_band_freq=64, fused_valves=True,
+        text_near_dedup=True, media_max_band_freq=64,
     )
     ing.process_batch(
         spark.createDataFrame(
@@ -1206,13 +1209,6 @@ def test_ingest_report_cli(spark, tmp_path, capsys):
     assert '"admitted": 1' in out and '"n_batches": 1' in out
     # empty dir: clean message, nonzero exit
     assert main(["ingest-report", str(tmp_path / "nothing")]) == 1
-
-
-def test_ingest_stats_off_writes_no_log(spark, tmp_path):
-    import os
-    ing = CurationIngest(str(tmp_path), run_id="r1", ingest_stats=False)
-    ing.process_batch(_docs(spark, [(0, _NEAR_A)]), batch_id=0)
-    assert not os.path.isdir(ing.ingest_log_path)
 
 
 def test_vector_index_embed_fallback_on_text_only_stream(spark, tmp_path):
@@ -1730,101 +1726,91 @@ def test_compact_ingest_log_noop_when_nothing_new(spark, tmp_path):
 
 
 def test_parallel_appends_match_sequential(spark, tmp_path):
-    """The concurrent store appends (r12 floor cut) produce stores
-    identical to the sequential form — same curated rows, fingerprints,
-    band keys, index segments, and ledger — because order between the
-    independent appends was never load-bearing."""
+    """The concurrent store appends fill EVERY store with exactly the
+    planted batch's survivors — curated docs, fingerprints, both band
+    stores, host edges, vector and text index segments, ledger — because
+    each append reads the one materialized survivor frame and order
+    between them was never load-bearing. Batch 0 keeps 0 and 1 (2 is an
+    exact copy of 0); batch 1's only doc is a text near-copy of 0 and
+    falls at the stored band probe."""
+    import hashlib
     import os
-
-    def run(sub: str, parallel: bool) -> CurationIngest:
-        ing = CurationIngest(
-            str(tmp_path / sub), run_id="r1",
-            media_dedup=True, media_near_dedup=True, text_near_dedup=True,
-            text_index=True, vector_index=True, embed_dim=16,
-            vector_n_lists=2, host_col="host", host_links_col="out_links",
-            parallel_appends=parallel,
-        )
-        rows = [
-            (0, _NEAR_A, b"m0" * 40, "h0", ["h1"]),
-            (1, _OTHER, b"m1" * 40, "h1", ["h0"]),
-            (2, _NEAR_A, b"m0" * 40, "h0", ["h1"]),  # exact dup of 0
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "doc_id long, text string, payload binary, host string, "
-            "out_links array<string>",
-        )
-        ing.process_batch(df, batch_id=0)
-        ing.process_batch(
-            spark.createDataFrame(
-                [(3, _NEAR_A2, b"m3" * 40, "h2", ["h0"])],
-                "doc_id long, text string, payload binary, host string, "
-                "out_links array<string>",
-            ),
-            batch_id=1,
-        )
-        return ing
-
-    par, seq = run("par", True), run("seq", False)
 
     from adsb_clickhouse_spark.streaming.curation import _has_parquet
 
-    def rows(ing, path):
+    A, B, _, C = _media_payloads()  # A, B and C are not near-copies
+    ing = CurationIngest(
+        str(tmp_path), run_id="r1",
+        media_dedup=True, media_near_dedup=True, text_near_dedup=True,
+        text_index=True, vector_index=True, embed_dim=16,
+        vector_n_lists=2, host_col="host", host_links_col="out_links",
+    )
+    schema = (
+        "doc_id long, text string, payload binary, host string, "
+        "out_links array<string>"
+    )
+    ing.process_batch(
+        spark.createDataFrame(
+            [
+                (0, _NEAR_A, A, "h0", ["h1"]),
+                (1, _OTHER, C, "h1", ["h0"]),
+                (2, _NEAR_A, A, "h0", ["h1"]),  # exact dup of 0
+            ],
+            schema,
+        ),
+        batch_id=0,
+    )
+    ing.process_batch(
+        spark.createDataFrame([(3, _NEAR_A2, B, "h2", ["h0"])], schema),
+        batch_id=1,
+    )
+    # per-stage walls recorded for every append plus the section total
+    # (batch 1 ran all six appends over zero survivors)
+    assert {
+        "text_index_append", "vector_index_append", "host_edges_append",
+        "phash_bands_append", "text_bands_append", "fps_append",
+        "store_appends_total",
+    } <= set(ing.last_stage_wall)
+
+    def rows(path, *cols):
         if not _has_parquet(path):
             return []
-        df = spark.read.parquet(path)
-        cols = sorted(c for c in df.columns if c != "batch_id")
-        return sorted(map(tuple, df.select(*cols).collect()))
+        return sorted(map(tuple, spark.read.parquet(path).select(*cols).collect()))
 
-    # EVERY store's full content, column by column (batch_id excluded —
-    # identical by construction): curated docs, fingerprints, both band
-    # stores, host edges
-    for attr in (
-        "curated_path",
-        "fps_path",
-        "phash_bands_path",
-        "text_bands_path",
-        "host_edges_path",
-    ):
-        assert rows(par, getattr(par, attr)) == rows(seq, getattr(seq, attr))
-    # vector index: the union of all segment vectors, id -> components
-    def vecs(ing):
-        seg_root = os.path.join(ing.vector_index_path, "segments")
-        out = {}
+    def md5(b: bytes) -> str:
+        return hashlib.md5(b).hexdigest()
+
+    assert rows(ing.curated_path, "doc_id") == [(0,), (1,)]
+    assert sorted(r for (r,) in rows(ing.fps_path, "fingerprint")) == sorted([
+        md5(_NEAR_A.encode()), md5(_OTHER.encode()),
+        "m|" + md5(A), "m|" + md5(C),
+    ])
+    # one row per band per survivor: text k=16 / 4 bands, media 4 bands
+    text_bands = rows(ing.text_bands_path, "bkey", "sig")
+    assert len(text_bands) == 2 * 4
+    assert all(len(sig) == 16 for _, sig in text_bands)
+    assert len(rows(ing.phash_bands_path, "bkey", "phash")) == 2 * 4
+    # host edges come from the RAW batches, distinct per batch
+    assert rows(ing.host_edges_path, "src", "dst") == [
+        ("h0", "h1"), ("h1", "h0"), ("h2", "h0"),
+    ]
+
+    def segment_rows(root, sub, *cols):
+        seg_root = os.path.join(root, "segments")
+        out = []
         for e in os.listdir(seg_root):
-            if e.startswith("_") or not _has_parquet(
-                os.path.join(seg_root, e, "vectors")
-            ):
-                continue
-            for r in spark.read.parquet(
-                os.path.join(seg_root, e, "vectors")
-            ).collect():
-                out[r["id"]] = list(r["v"])
+            path = os.path.join(seg_root, e, sub)
+            if not e.startswith("_") and _has_parquet(path):
+                out += spark.read.parquet(path).select(*cols).collect()
         return out
 
-    assert vecs(par) == vecs(seq)
-    # text index: same segment count and same postings content
-    def postings(ing):
-        seg_root = os.path.join(ing.index_path, "segments")
-        segs = [
-            e
-            for e in os.listdir(seg_root)
-            if not e.startswith("_")
-            and _has_parquet(os.path.join(seg_root, e, "postings"))
-        ]
-        if not segs:
-            return []
-        df = spark.read.parquet(
-            *(os.path.join(seg_root, e, "postings") for e in segs)
-        )
-        cols = sorted(df.columns)
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    assert postings(par) == postings(seq)
-    assert par.ingest_report(spark)["admitted"] == seq.ingest_report(spark)["admitted"]
-    # per-stage walls recorded for every append plus the section total
-    assert "store_appends_total" in par.last_stage_wall
-    assert "fps_append" in par.last_stage_wall
+    vecs = {r["id"]: list(r["v"]) for r in segment_rows(
+        ing.vector_index_path, "vectors", "id", "v"
+    )}
+    assert set(vecs) == {0, 1} and all(len(v) == 16 for v in vecs.values())
+    posted = {r["doc_id"] for r in segment_rows(ing.index_path, "postings", "doc_id")}
+    assert posted == {0, 1}
+    assert ing.ingest_report(spark)["admitted"] == 2
 
 
 def test_fully_deduped_batch_does_not_crash_observability(spark, tmp_path):

@@ -58,7 +58,7 @@ def _batches(spark, lo: int, n: int):
     )
 
 
-def _all_stores_ingest(base: str, parallel: bool = True, **overrides):
+def _all_stores_ingest(base: str, **overrides):
     from adsb_clickhouse_spark.streaming.curation import CurationIngest
 
     kwargs = dict(
@@ -72,7 +72,6 @@ def _all_stores_ingest(base: str, parallel: bool = True, **overrides):
         vector_n_lists=4,
         host_col="host",
         host_links_col="out_links",
-        parallel_appends=parallel,
     )
     kwargs.update(overrides)
     return CurationIngest(base, **kwargs)
@@ -152,10 +151,10 @@ def funnel_fingerprints(
     return fps
 
 
-def _run_size(spark, n: int, k: int, parallel: bool = True) -> dict:
+def _run_size(spark, n: int, k: int) -> dict:
     base = tempfile.mkdtemp(prefix=f"floor_{n}_")
     try:
-        ing = _all_stores_ingest(base, parallel)
+        ing = _all_stores_ingest(base)
         total: list[float] = []
         stage_runs: dict[str, list[float]] = {}
         for b in range(k + 1):  # +1 untimed warmup batch (plan JIT)
@@ -181,8 +180,7 @@ def _run_size(spark, n: int, k: int, parallel: bool = True) -> dict:
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--sequential"]
-    parallel = "--sequential" not in sys.argv
+    argv = sys.argv[1:]
     small = int(argv[0]) if len(argv) > 0 else 5_000
     big = int(argv[1]) if len(argv) > 1 else 50_000
     k = int(argv[2]) if len(argv) > 2 else 3
@@ -191,13 +189,7 @@ def main() -> int:
 
     spark = get_spark("ingest-floor")
     spark.sparkContext.setLogLevel("ERROR")
-    out = {
-        "parallel_appends": parallel,
-        "runs": [
-            _run_size(spark, small, k, parallel),
-            _run_size(spark, big, k, parallel),
-        ],
-    }
+    out = {"runs": [_run_size(spark, small, k), _run_size(spark, big, k)]}
     # clean-box anchor for the bench's MV-cascade ingest headline (r12
     # verdict item 7): the exact measurement bench.py reports, run here
     # solo so the figure has a quiet-box twin next to the stage
@@ -214,9 +206,9 @@ def main() -> int:
         for s in s_small
     }
     # the total must not double-count: store_appends_total SPANS the six
-    # per-append walls (which also OVERLAP each other in parallel mode),
-    # so the elapsed-wall total sums the section once and skips the
-    # per-append members it contains
+    # per-append walls (which also OVERLAP each other), so the
+    # elapsed-wall total sums the section once and skips the per-append
+    # members it contains
     append_members = {
         s for s in out["fixed_floor_est"] if s.endswith("_append")
     }
